@@ -22,7 +22,7 @@ Structure (see raptor_service_spark/pipeline.py), in EXECUTION ORDER:
      (default /root/testdata/sf0.1), each materialized to the noop sink —
      LAST, so its ~3-4 min of heat cannot pollute the scaling legs.
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the usable cores),
 SPARK_GRAFT_BENCH_SCALING=0 to skip the scaling legs,
 SPARK_GRAFT_BENCH_QUERY_BUDGET (sweep wall-clock cap, default 420 s),
 SPARK_GRAFT_BENCH_SCALING_BUDGET (retry cap for the probe-gated north-pair
@@ -568,14 +568,14 @@ def _kernel_task(n: int) -> float:
 
 def _ensure_prepared(n_docs: int) -> tuple[str, str]:
     from raptor_service_spark.pipeline import default_workdir, prepare_spans_table
-    from raptor_service_spark.session import get_spark
+    from raptor_service_spark.session import default_cpus, get_spark
 
     main_path = default_workdir(n_docs, SEED)
     warm_path = default_workdir(WARMUP_DOCS, SEED)
     todo = [(p, n) for p, n in ((main_path, n_docs), (warm_path, WARMUP_DOCS))
             if not os.path.exists(os.path.join(p, "_SUCCESS"))]
     if todo:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
         spark = get_spark("bench-prepare", master=f"local[{cpus}]")
         spark.sparkContext.setLogLevel("ERROR")
         for path, n in todo:
@@ -591,8 +591,10 @@ def main() -> None:
                        a[a.index("--warmup") + 1])
         return
 
+    from raptor_service_spark.session import default_cpus
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     sf = _sf_of(sf_dir)
 
     n_docs = _pipeline_docs(sf)

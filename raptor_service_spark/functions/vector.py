@@ -100,8 +100,13 @@ def cosine_sim_col(vec: Column, q: np.ndarray) -> Column:
 
     zip_with product + sequential-fold aggregate in float64 — whole-stage
     codegen, no Python worker. For dims <= ~2k the literal array is cheap.
+    Raises ValueError on a zero-norm or non-finite query, which would
+    otherwise fail inside a Spark task.
     """
     q = np.asarray(q, dtype=np.float64)
+    qnorm = float(np.linalg.norm(q))
+    if not np.isfinite(qnorm) or qnorm == 0:
+        raise ValueError("query vector has a zero or non-finite norm")
     qlit = F.array(*[F.lit(float(x)) for x in q])
     dot = F.aggregate(
         F.zip_with(vec, qlit, lambda a, b: a.cast("double") * b),
@@ -111,7 +116,6 @@ def cosine_sim_col(vec: Column, q: np.ndarray) -> Column:
     vnorm = F.sqrt(
         F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
     )
-    qnorm = float(np.linalg.norm(q))
     return dot / (vnorm * F.lit(qnorm))
 
 

@@ -13,6 +13,15 @@ Physical shape of brute force: per-Arrow-batch LOCAL top-k in a mapInPandas
 kernel (BLAS matvec), then a global merge of ``numPartitions * k`` rows via
 TakeOrderedAndProject — the classic distributed top-k: no full sort, no full
 shuffle, driver sees only the merged k.
+
+Physical shape of the index-backed batch path (grid_knn_multi): the ring
+plan is made on the driver from the cell-occupancy histogram, and a query
+batch then runs as ONE Spark job — a pruned scan of the candidate cells,
+coalesced to as few Python tasks as its candidate bytes need (one at serve
+scale), scored against the broadcast query matrix and per-query cell sets,
+and a per-qid top-k window that needs no Exchange over a single task. There
+is no (cell, qid) join and no candidate shuffle; the fixed cost of a job and
+of a Python task, not the rows read, dominates small query batches.
 """
 
 from __future__ import annotations
@@ -428,6 +437,25 @@ def grid_knn_sql(
     """
 
 
+_ID_BYTES = 20  # Spark's size estimate for a string column (StringType.defaultSize)
+
+
+def _unit_queries(qmat: np.ndarray, qids: list[str]) -> np.ndarray:
+    """Unit-normalize a query batch; ValueError naming the first bad qid."""
+    if qmat.ndim != 2 or len(qmat) != len(qids):
+        raise ValueError(f"queries must be (len(qids), dim) = ({len(qids)}, dim), got {qmat.shape}")
+    seen: set[str] = set()
+    for qid in qids:
+        if qid in seen:
+            raise ValueError(f"duplicate qid {qid!r}")
+        seen.add(qid)
+    norms = np.linalg.norm(qmat, axis=1)
+    bad = ~np.isfinite(norms) | (norms == 0)
+    if bad.any():
+        raise ValueError(f"query {qids[int(np.argmax(bad))]!r} has a zero or non-finite norm")
+    return qmat / norms[:, None]
+
+
 def grid_knn_multi(
     index: DataFrame,
     queries: np.ndarray,
@@ -440,83 +468,105 @@ def grid_knn_multi(
     pfx_res: int = ANN_PFX_RES,
     vec_dtype: str = "<f4",
 ) -> DataFrame:
-    """Grid-compacted kNN for MANY queries in two jobs total.
+    """Grid-compacted kNN for MANY queries in ONE Spark job.
 
-    Job 1 (skippable by passing precomputed ``cell_counts``): occupancy
-    histogram ``groupBy(ann_cell).count()`` — the planner statistic.
-    Job 2: one pass over the union of all queries' candidate cells. The scan
-    is pruned twice before any vector is decoded: ``pfx IN (...)`` hits the
-    index table's directory partitions (partition pruning), and
-    ``ann_cell IN (...)`` skips row groups inside them (files are sorted by
-    ann_cell). Surviving rows get their probing query ids via a broadcast
-    (cell, qid) join, then exact cosine (one frombuffer + GEMV per Arrow
-    batch) and a per-qid top-k window; the shuffle carries only candidates.
+    Planning runs on the driver: plan_candidate_cells picks each query's
+    ring of cells from the occupancy histogram ``cell_counts``, or a full
+    scan when the table is too sparse. Without ``cell_counts`` one
+    ``groupBy(ann_cell).count()`` job computes it first.
 
-    Replaces per-query ring probing (grid_knn) whose count-jobs dominate at
-    high query counts. Output: (qid, id, dist), top-k per qid. ``index``
-    must carry (id, v binary-f32, ann_cell, pfx) — see build_ann_index.
+    The job scans the union of the candidate cells, pruned twice before any
+    vector is decoded: ``pfx IN (...)`` hits the index table's directory
+    partitions and ``ann_cell IN (...)`` skips row groups inside them (files
+    are sorted by ann_cell); any full-scan query reads the whole index. The
+    scan is coalesced to ``ceil(candidate bytes / maxPartitionBytes)`` tasks,
+    clamped to [1, defaultParallelism]: the planner knows the candidate row
+    count exactly, and a Python task's fixed cost dwarfs reading a few
+    thousand rows, so splits follow bytes rather than file count. The
+    normalized queries and each query's cells travel in one Python
+    broadcast — no (cell, qid) relation is joined. Per Arrow batch, each
+    query scores the rows of its cells (``np.isin`` mask, float64
+    normalize + GEMV; full-scan queries score every row) and ships only the
+    rows that can still reach its top k. A per-qid window keeps the top k by
+    (round(dist, 9), id); over a single task it runs without an Exchange.
+
+    Output: (qid, id, dist), top-k per qid. ``index`` must carry (id, v
+    binary, ann_cell, pfx) — see build_ann_index. Raises ValueError before
+    any job on a duplicate qid or a zero-norm or non-finite query vector.
     """
+    import math
+
+    from pyspark.sql import Window
+
     from raptor_service_spark.geo.grid import cell_parent_np
 
+    qids = list(qids)
+    spark = index.sparkSession
+    if not qids:
+        return spark.createDataFrame([], "qid string, id string, dist double")
     qmat = np.asarray(queries, dtype=np.float64)
+    qnorm = _unit_queries(qmat, qids)
     if cell_counts is None:
         cell_counts = {
             r["ann_cell"]: r["cnt"]
             for r in index.groupBy("ann_cell").agg(F.count("*").alias("cnt")).collect()
         }
 
-    spark = index.sparkSession
-    pairs: list[tuple[int, str]] = []
-    full_scan_qids: list[str] = []
-    for q, qid in zip(qmat, qids):
-        cells = plan_candidate_cells(
-            cell_counts, q, k, res, seed, min_candidates_factor
-        )
-        if cells is None:
-            full_scan_qids.append(qid)
-        else:
-            pairs.extend((c, qid) for c in cells)
-
-    qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    qmap = {qid: qnorm[i] for i, qid in enumerate(qids)}
-    qmap_b = spark.sparkContext.broadcast(qmap)
+    planned = [
+        plan_candidate_cells(cell_counts, q, k, res, seed, min_candidates_factor) for q in qmat
+    ]
+    probes = [None if cells is None else np.asarray(cells, dtype=np.int64) for cells in planned]
+    if any(cells is None for cells in planned):
+        cand = index
+        cand_rows = sum(cell_counts.values())
+    else:
+        all_cells = sorted(set().union(*planned))
+        prefixes = sorted({int(p) for p in cell_parent_np(np.array(all_cells), pfx_res)})
+        cand = index.filter(F.col("pfx").isin(prefixes) & F.col("ann_cell").isin(all_cells))
+        cand_rows = sum(cell_counts.get(c, 0) for c in all_cells)
+    row_bytes = 8 + _ID_BYTES + qmat.shape[1] * np.dtype(vec_dtype).itemsize  # ann_cell, id, v
+    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    ntasks = min(
+        max(math.ceil(cand_rows * row_bytes / split_bytes), 1),
+        spark.sparkContext.defaultParallelism,
+    )
+    payload = spark.sparkContext.broadcast((qnorm, qids, probes))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        qn, names, cells_of = payload.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            pdf = pdf.reset_index(drop=True)
             mat = np.frombuffer(b"".join(pdf["v"]), dtype=vec_dtype).reshape(len(pdf), -1)
             mat = mat.astype(np.float64)
             norms = np.linalg.norm(mat, axis=1)
             norms[norms == 0] = 1.0
             mat /= norms[:, None]
-            out = []
-            for qid, grp in pdf.groupby("qid", sort=False):
-                sim = mat[grp.index.to_numpy()] @ qmap_b.value[qid]
-                out.append(pd.DataFrame({"qid": qid, "id": grp["id"].to_numpy(), "dist": 1.0 - sim}))
-            yield pd.concat(out, ignore_index=True)
+            cells = pdf["ann_cell"].to_numpy()
+            ids = pdf["id"].to_numpy()
+            out_q, out_id, out_d = [], [], []
+            for qi, qcells in enumerate(cells_of):
+                rows = np.arange(len(pdf)) if qcells is None else np.flatnonzero(np.isin(cells, qcells))
+                if not len(rows):
+                    continue
+                dist = 1.0 - (mat if qcells is None else mat[rows]) @ qn[qi]
+                if 0 < k < len(rows):
+                    # a row over 2e-9 above this batch's k-th distance rounds
+                    # (9 places) above k rows here, so it cannot reach the top k
+                    keep = dist <= np.partition(dist, k - 1)[k - 1] + 2e-9
+                    rows, dist = rows[keep], dist[keep]
+                out_q.append(np.full(len(rows), names[qi], dtype=object))
+                out_id.append(ids[rows])
+                out_d.append(dist)
+            if out_d:
+                yield pd.DataFrame(
+                    {"qid": np.concatenate(out_q), "id": np.concatenate(out_id), "dist": np.concatenate(out_d)}
+                )
 
-    parts = []
-    if pairs:
-        all_cells = sorted({c for c, _ in pairs})
-        prefixes = sorted({int(p) for p in cell_parent_np(np.array(all_cells), pfx_res)})
-        cells_df = spark.createDataFrame(pairs, "ann_cell long, qid string")
-        cand = (
-            index.filter(F.col("pfx").isin(prefixes) & F.col("ann_cell").isin(all_cells))
-            .join(F.broadcast(cells_df), "ann_cell")
-            .select("qid", "id", "v")
-        )
-        parts.append(cand)
-    if full_scan_qids:
-        qdf = spark.createDataFrame([(q,) for q in full_scan_qids], "qid string")
-        parts.append(index.crossJoin(F.broadcast(qdf)).select("qid", "id", "v"))
-    if not parts:
-        return spark.createDataFrame([], "qid string, id string, dist double")
-    allc = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    scored = allc.mapInPandas(score, schema="qid string, id string, dist double")
-
-    from pyspark.sql import Window
-
+    scored = (
+        cand.select("ann_cell", "id", "v")
+        .coalesce(ntasks)
+        .mapInPandas(score, schema="qid string, id string, dist double")
+    )
     w = Window.partitionBy("qid").orderBy(F.round(F.col("dist"), 9).asc(), F.col("id").asc())
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")

@@ -12,6 +12,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
 def get_spark(
     app_name: str = "raptor-service-spark",
     master: str | None = None,
@@ -25,7 +30,7 @@ def get_spark(
     skew-join splitting at runtime so ``shuffle_partitions`` is an upper
     bound, not a tuning cliff.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
 

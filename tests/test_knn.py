@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from raptor_service_spark.datagen import gen_query_vectors
+from raptor_service_spark.functions.vector import cosine_sim_col
 from raptor_service_spark.operators.knn import (
     brute_force_knn,
     brute_force_knn_multi,
@@ -46,6 +47,14 @@ def test_brute_force_matches_oracle(emb, emb_pd):
         exp = _oracle_topk(emb_pd, q, 10)
         assert got.id.tolist() == exp.id.tolist()
         np.testing.assert_allclose(got.dist.values, exp.dist.values, rtol=1e-9)
+
+
+@pytest.mark.parametrize("bad", [0.0, np.nan, np.inf])
+def test_cosine_sim_col_rejects_zero_or_nonfinite_query(spark, bad):
+    q = np.zeros(4)
+    q[0] = bad
+    with pytest.raises(ValueError, match="zero or non-finite norm"):
+        cosine_sim_col(F.col("v"), q)
 
 
 def test_brute_force_multi_matches_single(emb, emb_pd):
